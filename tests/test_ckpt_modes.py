@@ -6,11 +6,14 @@ in their hot loops."""
 from __future__ import annotations
 
 import contextlib
+import glob
+import os
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 import pytest
 
-from transcription_lakehouse_spark.ckpt import MODE_CONF, cut_lineage
+from transcription_lakehouse_spark.ckpt import DIR_CONF, MODE_CONF, cut_lineage
 from transcription_lakehouse_spark.operators.graph import (
     connected_components,
 )
@@ -45,14 +48,44 @@ def _rows(df):
 def test_cut_lineage_reliable_sets_checkpoint_dir(spark, tmp_path):
     df = spark.range(10).withColumn("x", F.col("id") * 2)
     with _mode(spark, "reliable"):
-        spark.conf.set(
-            "spark.lakehouse.checkpoint.dir", str(tmp_path / "ckpt")
-        )
-        out = cut_lineage(df)
+        spark.conf.set(DIR_CONF, str(tmp_path / "ckpt"))
+        try:
+            out = cut_lineage(df)
+        finally:
+            spark.conf.unset(DIR_CONF)
         assert _rows(out) == _rows(df)
-        # reliable checkpoints truncate lineage to an RDD scan backed by
-        # files under the checkpoint dir
-        assert (tmp_path / "ckpt").exists()
+    # the context keeps the first checkpoint dir it was given, which an
+    # earlier reliable-mode test may have set: check the dir actually used
+    used = spark.sparkContext._jsc.sc().getCheckpointDir()
+    assert used.isDefined()
+    # reliable checkpoints truncate lineage to an RDD scan backed by
+    # files under the checkpoint dir
+    assert glob.glob(os.path.join(urlparse(used.get()).path, "rdd-*"))
+
+
+def test_cut_lineage_reliable_refuses_node_local_dir_on_cluster(
+    spark, monkeypatch
+):
+    """With no checkpoint dir configured, a non-local master must fail
+    loudly instead of checkpointing into each node's own $TMPDIR."""
+    df = spark.range(3)
+    sc = spark.sparkContext
+
+    class _NoDir:
+        def sc(self):
+            return self
+
+        def getCheckpointDir(self):
+            return self
+
+        def isDefined(self):
+            return False
+
+    monkeypatch.setattr(sc, "master", "spark://cluster:7077")
+    monkeypatch.setattr(sc, "_jsc", _NoDir())
+    with _mode(spark, "reliable"):
+        with pytest.raises(RuntimeError, match=DIR_CONF):
+            cut_lineage(df)
 
 
 @pytest.mark.parametrize("algorithm", ["hash-to-min", "two-phase"])

@@ -77,76 +77,67 @@ def test_incremental_filter_drops_seen_episodes(spark):
 
 
 def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
-    """Small-file compaction: 64 tiny files -> few size-targeted files,
-    byte-identical row multiset, old version untouched."""
-    from transcription_lakehouse_spark.maintenance import compact, file_stats
+    """Small-file compaction (LogTable OPTIMIZE): 64 tiny files -> few
+    files, identical row multiset, pre-compaction version untouched."""
+    from transcription_lakehouse_spark.txlog import LogTable
 
-    src = str(tmp_path / "v1")
-    dst = str(tmp_path / "v2")
-    spark.range(10_000).selectExpr(
+    t = LogTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(10_000).selectExpr(
         "id", "id % 97 AS k", "repeat('x', 50) AS pad"
-    ).repartition(64).write.parquet(src)
-    assert file_stats(src)["n_files"] == 64
+    ).repartition(64))
+    before = t.read().orderBy("id").collect()
 
-    stats = compact(spark, src, dst, target_file_bytes=256 * 1024,
-                    sort_within_by=["k"])
-    assert stats["n_files_before"] == 64
-    assert stats["n_files_after"] < 16
-    assert stats["rows"] == 10_000
-
-    a = spark.read.parquet(src).orderBy("id").collect()
-    b = spark.read.parquet(dst).orderBy("id").collect()
-    assert a == b
-    # immutability: source still intact after compaction
-    assert file_stats(src)["n_files"] == 64
+    stats = t.compact(target_files=4, cluster_by=["k"])
+    assert stats["files_before"] == 64
+    assert stats["files_after"] < 16
+    assert t.read().orderBy("id").collect() == before
+    # immutability: the pre-compaction version still reads its 64 files
+    assert len(t.read(version=0).inputFiles()) == 64
+    assert t.read(version=0).count() == 10_000
 
 
 def test_merge_upsert_replaces_and_inserts(spark, tmp_path):
-    from transcription_lakehouse_spark.maintenance import merge_upsert
+    from transcription_lakehouse_spark.txlog import LogTable
 
-    src = str(tmp_path / "t1")
-    dst = str(tmp_path / "t2")
-    spark.createDataFrame(
+    t = LogTable(spark, str(tmp_path / "t"))
+    t.append(spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "id int, v string"
-    ).write.parquet(src)
+    ))
     updates = spark.createDataFrame(
         [(2, "B2"), (4, "d")], "id int, v string"
     )
-    stats = merge_upsert(spark, src, dst, updates, ["id"])
-    assert stats == {
-        "existing": 3,
-        "keys_updated": 1,
-        "rows_replaced": 1,
-        "inserted": 1,
-        "rows_out": 4,
-    }
-    got = {r["id"]: r["v"] for r in spark.read.parquet(dst).collect()}
+    t.merge(updates, key="id")
+    got = {r["id"]: r["v"] for r in t.read().collect()}
     assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
     # old version untouched
-    old = {r["id"]: r["v"] for r in spark.read.parquet(src).collect()}
+    old = {r["id"]: r["v"] for r in t.read(version=0).collect()}
     assert old == {1: "a", 2: "b", 3: "c"}
+    images = sorted(
+        (r["id"], r["_change_type"])
+        for r in t.changes_keyed(0, 1, key="id").collect()
+    )
+    assert images == [
+        (2, "update_postimage"), (2, "update_preimage"), (4, "insert"),
+    ]
 
 
 def test_compaction_sort_clusters_row_groups(spark, tmp_path):
-    """sort_within_by makes parquet min/max stats selective: after sorting
+    """cluster_by makes parquet min/max stats selective: after clustering
     by k, each output file covers a narrow disjoint k range (the data-
     skipping footprint a filtered 100 TB scan prunes on), while the
     unsorted source files all span nearly the full domain."""
-    import glob
-
     import pyarrow.parquet as pq
 
-    from transcription_lakehouse_spark.maintenance import compact
+    from transcription_lakehouse_spark.txlog import LogTable
 
-    src = str(tmp_path / "u1")
-    dst = str(tmp_path / "u2")
-    spark.range(40_000).selectExpr(
+    t = LogTable(spark, str(tmp_path / "t"))
+    t.append(spark.range(40_000).selectExpr(
         "id", "CAST(hash(id) % 1000 AS INT) AS k", "repeat('x', 30) AS pad"
-    ).repartition(16).write.parquet(src)
+    ).repartition(16))
 
-    def rg_widths(path):
+    def rg_widths():
         widths = []
-        for f in glob.glob(f"{path}/*.parquet"):
+        for f in t._snapshot()[0]:
             md = pq.ParquetFile(f).metadata
             ki = next(
                 i for i in range(md.num_columns)
@@ -157,16 +148,14 @@ def test_compaction_sort_clusters_row_groups(spark, tmp_path):
                 widths.append(st.max - st.min)
         return widths
 
-    stats = compact(
-        spark, src, dst, target_file_bytes=32 * 1024, sort_within_by=["k"]
-    )
-    assert stats["n_files_after"] >= 4, stats
     # hash-repartitioned source: every row group spans ~the whole k domain
-    src_w = rg_widths(src)
+    src_w = rg_widths()
     assert min(src_w) > 900, src_w
+    stats = t.compact(target_files=8, cluster_by=["k"])
+    assert stats["files_after"] >= 4, stats
     # range-clustered compaction: each file owns a disjoint k slice, so a
     # k-filter prunes whole files by footer stats alone
-    dst_w = rg_widths(dst)
+    dst_w = rg_widths()
     assert sum(dst_w) / len(dst_w) < 0.5 * sum(src_w) / len(src_w), (
         src_w,
         dst_w,
@@ -174,82 +163,89 @@ def test_compaction_sort_clusters_row_groups(spark, tmp_path):
 
 
 def test_merge_upsert_rejects_duplicate_update_keys(spark, tmp_path):
+    """MERGE refuses update batches it cannot apply as one row per key:
+    duplicate keys, and NULL keys (a NULL never matches the existing
+    NULL-keyed row, so it would be inserted beside it, not replace it).
+    Nothing commits on refusal; merge_cdc shares the check."""
     import pytest
 
-    from transcription_lakehouse_spark.maintenance import merge_upsert
+    from transcription_lakehouse_spark.txlog import LogTable
 
-    src = str(tmp_path / "m1")
-    spark.createDataFrame([(1, "a")], "id int, v string").write.parquet(src)
-    dupes = spark.createDataFrame(
-        [(1, "x"), (1, "y")], "id int, v string"
-    )
-    with pytest.raises(ValueError, match="distinct keys"):
-        merge_upsert(spark, src, str(tmp_path / "m2"), dupes, ["id"])
+    t = LogTable(spark, str(tmp_path / "m"))
+    t.append(spark.createDataFrame(
+        [(None, "old"), ("a", "x")], "id string, v string"
+    ))
+    dupes = spark.createDataFrame([("a", "x"), ("a", "y")], "id string, v string")
+    with pytest.raises(ValueError, match="at most one source row"):
+        t.merge(dupes, key="id")
+    null_keyed = spark.createDataFrame([(None, "new")], "id string, v string")
+    with pytest.raises(ValueError, match="NULL id"):
+        t.merge(null_keyed, key="id")
+    with pytest.raises(ValueError, match="NULL id"):
+        t.merge_cdc(null_keyed.withColumn("_op", F.lit("U")), key="id")
+    assert t.version() == 0
+    assert sorted((tuple(r) for r in t.read().collect()), key=str) == [
+        ("a", "x"), (None, "old"),
+    ]
 
 
 def test_version_diff_tags_added_removed_changed(spark, tmp_path):
-    """Row-level version diff: only the delta comes back, tagged by kind;
-    identical versions diff to empty."""
-    import pyspark.sql.functions as F
+    """Row-level version diff (LogTable CDF): only the delta comes back,
+    tagged by kind; identical versions diff to empty."""
+    from transcription_lakehouse_spark.txlog import LogTable
 
-    from transcription_lakehouse_spark.maintenance import version_diff
+    def diff(t, v1, v2):
+        return sorted(
+            (r["id"], r["_change_type"])
+            for r in t.changes_keyed(v1, v2, key="id").collect()
+        )
 
     a = spark.createDataFrame(
         [(1, "x", 1.0), (2, "y", 2.0), (3, "z", 3.0)],
         "id long, name string, score double",
     )
-    pa, pb, pc = (str(tmp_path / p) for p in ("va", "vb", "vc"))
-    a.write.parquet(pa)
-    # b: drop id=3, change id=2, add id=4
-    b = spark.createDataFrame(
+    t = LogTable(spark, str(tmp_path / "t"))
+    t.append(a)                                              # v0
+    # v1: drop id=3, change id=2, add id=4
+    t.overwrite(spark.createDataFrame(
         [(1, "x", 1.0), (2, "y", 9.9), (4, "w", 4.0)],
         "id long, name string, score double",
-    )
-    b.write.parquet(pb)
-    got = {
-        r["id"]: r["change"]
-        for r in version_diff(spark, pa, pb, ["id"]).collect()
-    }
-    assert got == {2: "changed", 3: "removed", 4: "added"}
+    ))
+    assert diff(t, 0, 1) == [
+        (2, "update_postimage"), (2, "update_preimage"), (3, "delete"),
+        (4, "insert"),
+    ]
     # identical copies diff empty (row order / partitioning irrelevant)
-    spark.read.parquet(pa).repartition(7).write.parquet(pc)
-    assert version_diff(spark, pa, pc, ["id"]).count() == 0
-    # duplicate-key cardinality change reads as changed
-    a.unionByName(a.filter(F.col("id") == 1)).write.mode("overwrite").parquet(pb)
-    got2 = {
-        r["id"]: r["change"]
-        for r in version_diff(spark, pa, pb, ["id"]).collect()
-    }
-    assert got2 == {1: "changed"}
-    # NULL keys are null-safe: identical NULL-keyed rows diff empty, a
-    # changed NULL-keyed row reads as changed (not added+removed)
-    n1 = spark.createDataFrame(
+    t.overwrite(t.read().repartition(7))                     # v2
+    assert t.changes(1, 2).count() == 0
+    # a duplicated row is a multiset change: one extra insert
+    t.overwrite(a)                                           # v3
+    t.overwrite(a.unionByName(a.filter(F.col("id") == 1)))   # v4
+    assert diff(t, 3, 4) == [(1, "insert")]
+    # NULL keys pair with each other: a changed NULL-keyed row reads as
+    # an update, not an unrelated delete + insert
+    n = LogTable(spark, str(tmp_path / "n"))
+    n.append(spark.createDataFrame(
         [(None, "n", 0.5), (9, "q", 9.0)], "id long, name string, score double"
-    )
-    pn1, pn2 = str(tmp_path / "n1"), str(tmp_path / "n2")
-    n1.write.parquet(pn1)
-    n1.write.parquet(pn2)
-    assert version_diff(spark, pn1, pn2, ["id"]).count() == 0
-    spark.createDataFrame(
+    ))
+    n.overwrite(spark.createDataFrame(
         [(None, "n", 7.7), (9, "q", 9.0)], "id long, name string, score double"
-    ).write.mode("overwrite").parquet(pn2)
-    got3 = {
-        r["id"]: r["change"]
-        for r in version_diff(spark, pn1, pn2, ["id"]).collect()
-    }
-    assert got3 == {None: "changed"}
+    ))
+    assert diff(n, 0, 1) == [
+        (None, "update_postimage"), (None, "update_preimage"),
+    ]
 
 
 def test_read_as_of_resolves_version_by_timestamp_and_label(spark, tmp_path):
     """Time-travel reader (SURVEY §1.1 snapshot<->time-travel mapping):
     write v1/v2, resolve by label, by as_of instant, and latest; a rollback
-    audit composes the resolved paths with version_diff."""
+    audit imports the resolved versions into a LogTable and diffs them."""
     from transcription_lakehouse_spark.ingestion import (
         list_versions,
         read_as_of,
         write_versioned,
     )
-    from transcription_lakehouse_spark.maintenance import version_diff
+    from transcription_lakehouse_spark.txlog import LogTable
 
     base = str(tmp_path)
     v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id int, val string")
@@ -274,11 +270,16 @@ def test_read_as_of_resolves_version_by_timestamp_and_label(spark, tmp_path):
         read_as_of(spark, base, "t", as_of="2000-01-01T00:00:00+00:00")
 
     # rollback verification: diff of the two resolved versions
+    audit = LogTable(spark, str(tmp_path / "audit"))
+    audit.append(spark.read.parquet(p1))
+    audit.overwrite(spark.read.parquet(p2))
     changes = {
-        (r["id"], r["change"])
-        for r in version_diff(spark, p1, p2, ["id"]).collect()
+        (r["id"], r["_change_type"])
+        for r in audit.changes_keyed(0, 1, key="id").collect()
     }
-    assert changes == {(2, "changed"), (3, "added")}
+    assert changes == {
+        (2, "update_preimage"), (2, "update_postimage"), (3, "insert"),
+    }
 
 
 def test_read_as_of_falls_back_to_mtime_without_sidecar(spark, tmp_path):
@@ -345,7 +346,7 @@ def test_vacuum_retention_keeps_newest_and_respects_cutoff(spark, tmp_path):
         read_as_of,
         write_versioned,
     )
-    from transcription_lakehouse_spark.maintenance import vacuum
+    from transcription_lakehouse_spark.ingestion import vacuum
 
     base = str(tmp_path)
     df = spark.createDataFrame([(1,)], "id int")

@@ -1539,8 +1539,10 @@ def test_click_cli_flag_surface(spark, tmp_path):
     --incremental / --update-catalog, materialize --heuristic-beats,
     catalog --catalog-type/--output-format/--rankings/--statistics,
     validate exit code, quality --coverage-min recorded in the report,
-    snapshot create+verify, vacuum --dry-run. CliRunner, in-process (the
-    session fixture is reused via getOrCreate)."""
+    snapshot create+verify, vacuum --dry-run, and the failure exits:
+    validate on duplicated utterance ids and verify on a tampered snapshot
+    both exit 1. CliRunner, in-process (the session fixture is reused via
+    getOrCreate)."""
     import os
 
     from click.testing import CliRunner
@@ -1562,11 +1564,13 @@ def test_click_cli_flag_surface(spark, tmp_path):
     assert r.exit_code == 0, r.output
     assert '"dry_run": true' in r.output
     assert not os.path.isdir(os.path.join(lake, "normalized"))
+    assert not os.path.isdir(os.path.join(lake, "raw"))
 
-    # real ingest + catalogs in one shot
+    # real ingest + catalogs in one shot; the raw JSONL is kept (bronze)
     r = run("ingest", str(data), "--lakehouse-path", lake, "--update-catalog")
     assert r.exit_code == 0, r.output
     assert '"valid": 40' in r.output
+    assert os.listdir(os.path.join(lake, "raw", "v1")) == ["ep1.jsonl"]
 
     # incremental re-ingest of the same corpus adds zero rows
     _write_jsonl(data, "ep2.jsonl", n=10, episode="LOS - #2 - 2024-01-02 - B")
@@ -1648,6 +1652,23 @@ def test_click_cli_flag_surface(spark, tmp_path):
     r = run("vacuum", "normalized", "--lakehouse-path", lake, "--keep-last", "1")
     assert r.exit_code == 0, r.output
     assert not os.path.isdir(os.path.join(lake, "normalized", "v1"))
+
+    # failure exits: a duplicated utterance_id fails validate ...
+    norm2 = read_versioned(spark, lake, "normalized", "v2")
+    write_versioned(norm2.unionByName(norm2.limit(1)), lake, "normalized", "v3")
+    r = run("validate", "--lakehouse-path", lake, "--version", "v3",
+            "--output-format", "json")
+    assert r.exit_code == 1, r.output
+    assert json.loads(r.output)["checks"]["utterance_id_dupes"] == 1
+    # ... and one changed byte in a snapshot file fails verify
+    with open(os.path.join(snap_dir, "lake_manifest.json")) as f:
+        files = json.load(f)["artifacts"]["normalized"]["files"]
+    rel = min(r for r in files if r.endswith(".parquet"))
+    with open(os.path.join(snap_dir, rel), "ab") as f:
+        f.write(b"\0")
+    r = run("snapshot", "verify", snap_dir)
+    assert r.exit_code == 1, r.output
+    assert f"checksum mismatch: {rel}" in r.output
 
 
 def test_read_state_treats_empty_dir_as_first_batch(spark, tmp_path):
@@ -2239,13 +2260,13 @@ def test_pipeline_on_txlog_lake(spark, tmp_path):
     dirs-format vacuum refuses to touch a txlog lake."""
     import os
 
-    from transcription_lakehouse_spark import maintenance
     from transcription_lakehouse_spark.ingestion import (
         incremental_filter,
         ingest as core_ingest,
         lake_format,
         read_as_of,
         read_versioned,
+        vacuum,
     )
     from transcription_lakehouse_spark.sources.transcripts import (
         read_jsonl,
@@ -2316,7 +2337,7 @@ def test_pipeline_on_txlog_lake(spark, tmp_path):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="txlog"):
-        maintenance.vacuum(lake, "normalized")
+        vacuum(lake, "normalized")
     # the log-driven vacuum is the supported path
     assert t.vacuum(retain_last=1)["deleted"] >= 1
     assert t.read().count() == 70

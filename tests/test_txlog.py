@@ -2422,14 +2422,17 @@ def test_clustering_health_overlap_depth(spark, tmp_path):
 
 
 def test_optimize_lake_sweeps_only_debted_tables(spark, tmp_path):
-    """Lake-wide auto-OPTIMIZE (pipeline `maintain`): one metadata-only
-    decision per txlog table under the lake root — the table past the
-    dead-ratio trigger purges, the clean one (and nested ones) commit
-    nothing; a dirs-format lake is refused."""
-    import pytest as _pytest
+    """Lake-wide auto-OPTIMIZE (`lakehouse maintain LAKE`): one
+    metadata-only decision per txlog table under the lake root — the
+    table past the dead-ratio trigger purges, the clean one (and nested
+    ones) commit nothing; a dirs-format lake is refused with exit 1."""
+    import json as _json
+    import unittest.mock as _mock
 
+    from click.testing import CliRunner
+
+    from transcription_lakehouse_spark import cli as cli_mod
     from transcription_lakehouse_spark.ingestion import set_lake_format
-    from transcription_lakehouse_spark.maintenance import optimize_lake
 
     lake = tmp_path / "lake"
     lake.mkdir()
@@ -2444,7 +2447,13 @@ def test_optimize_lake_sweeps_only_debted_tables(spark, tmp_path):
     clean.append(spark.range(100).selectExpr("id"))
     v_clean = clean.version()
 
-    out = optimize_lake(spark, str(lake), max_dead_ratio=0.2)
+    def maintain(*args):
+        with _mock.patch.object(cli_mod, "_spark", lambda cmd: spark):
+            return CliRunner().invoke(cli_mod.cli, ["maintain", *args])
+
+    r = maintain(str(lake), "--max-dead-ratio", "0.2")
+    assert r.exit_code == 0, r.output
+    out = _json.loads(r.output)
     assert set(out) == {"normalized", os.path.join("catalogs", "episodes")}
     assert out["normalized"]["triggered"] is True
     assert out["normalized"]["purged_files"] >= 1
@@ -2454,14 +2463,16 @@ def test_optimize_lake_sweeps_only_debted_tables(spark, tmp_path):
     assert LogTable(
         spark, str(lake / "catalogs" / "episodes")).version() == v_clean
     assert debted.read().count() == 500
-    # a second sweep is a lake-wide no-op
-    out2 = optimize_lake(spark, str(lake), max_dead_ratio=0.2)
-    assert all(not r["triggered"] for r in out2.values())
+    # a second sweep (default trigger 0.2) is a lake-wide no-op
+    r2 = maintain(str(lake))
+    assert r2.exit_code == 0, r2.output
+    assert all(not rep["triggered"] for rep in _json.loads(r2.output).values())
 
     dirs_lake = tmp_path / "dirs_lake"
     dirs_lake.mkdir()
-    with _pytest.raises(ValueError, match="not a txlog-format lake"):
-        optimize_lake(spark, str(dirs_lake))
+    r3 = maintain(str(dirs_lake))
+    assert r3.exit_code == 1
+    assert "not a txlog-format lake" in r3.output
 
 
 def test_constraint_stats_parser_and_prover_unit():

@@ -16,7 +16,9 @@ beam fragments need reliable checkpointing instead.
   into ``spark.lakehouse.checkpoint.dir`` (or the already-set
   ``SparkContext`` checkpoint dir; a cluster deployment points this at
   HDFS/object storage). Survives executor loss; costs one write+read of
-  the truncated relation, which is the standard durability trade.
+  the truncated relation, which is the standard durability trade. With
+  neither dir set, a ``local…`` master falls back to
+  ``$TMPDIR/lakehouse_ckpt``; any other master raises.
 
 Values are identical in both modes — a checkpoint materializes, never
 recomputes, its input. ``tests/test_ckpt_modes.py`` pins mode parity on
@@ -61,6 +63,14 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
             try:
                 target = spark.conf.get(DIR_CONF)
             except Exception:  # noqa: BLE001 - conf unset
+                if not sc.master.startswith("local"):
+                    # a node-local dir on a cluster: executors would write
+                    # checkpoint files the driver and its peers cannot read
+                    raise RuntimeError(
+                        f"{MODE_CONF}=reliable on master {sc.master!r} "
+                        f"needs {DIR_CONF} (or a SparkContext checkpoint "
+                        "dir) on storage every node can reach"
+                    ) from None
                 target = os.path.join(
                     os.environ.get("TMPDIR", "/tmp"), "lakehouse_ckpt"
                 )

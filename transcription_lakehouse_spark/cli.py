@@ -1,8 +1,7 @@
 """Click CLI with reference flag parity (`/root/reference/src/lakehouse/
 cli/commands/*.py`): the same commands, options, and exit-code semantics,
-wrapping the Spark pipeline stages in pipeline.py. The positional
-`python -m transcription_lakehouse_spark.pipeline …` entry remains for
-scripting; this is the human surface.
+wrapping the Spark pipeline stages in pipeline.py. This is the
+package's one command line.
 
     python -m transcription_lakehouse_spark.cli ingest DATA --pattern '*.jsonl'
     python -m transcription_lakehouse_spark.cli materialize --heuristic-beats
@@ -12,6 +11,7 @@ scripting; this is the human surface.
     python -m transcription_lakehouse_spark.cli snapshot create --version v1.2.0
     python -m transcription_lakehouse_spark.cli snapshot verify SNAP_DIR
     python -m transcription_lakehouse_spark.cli vacuum spans --keep-last 2
+    python -m transcription_lakehouse_spark.cli maintain LAKE --max-dead-ratio 0.2
 """
 
 from __future__ import annotations
@@ -144,6 +144,9 @@ def ingest(input_path, lakehouse_path, pattern, version, dry_run,
             )
     out = _ingest(spark, raw, lakehouse_path, version, existing=existing,
                   fmt=fmt)
+    from .pipeline import copy_raw
+
+    copy_raw(glob_path, lakehouse_path)
     if update_catalog:
         from .pipeline import catalog as _catalog
 
@@ -387,14 +390,42 @@ def index_drift(index_path, current_parquet, psi_threshold):
 @click.option("--dry-run", is_flag=True)
 def vacuum(artifact, lakehouse_path, keep_last, older_than, dry_run):
     """Reclaim superseded artifact versions (beyond the reference —
-    completes the write/read_as_of/diff lifecycle)."""
-    from .maintenance import vacuum as _vacuum
+    completes the write/read_as_of lifecycle)."""
+    from .ingestion import vacuum as _vacuum
 
     removed = _vacuum(
         lakehouse_path, artifact, keep_last=keep_last,
         older_than=older_than, dry_run=dry_run,
     )
     _echo({"artifact": artifact, "dry_run": dry_run, "removed": removed})
+
+
+@cli.command()
+@click.argument("lake", type=click.Path(exists=True))
+@click.option("--max-dead-ratio", type=float, default=0.2, show_default=True,
+              help="Per-table dead-row ratio that triggers a purge")
+def maintain(lake, max_dead_ratio):
+    """Lake-wide auto-OPTIMIZE for a txlog-format lake: every
+    transaction-log table under LAKE gets ONE metadata-only
+    ``optimize_if_needed`` decision, and only tables past the trigger
+    commit a purge. Prints {artifact: report}. Discovery walks the LOCAL
+    tree for ``_txlog`` markers (artifacts nest, e.g.
+    ``catalogs/episodes``); on an object store run `table optimize
+    --if-needed` per table."""
+    from .ingestion import lake_format
+    from .txlog import LogTable
+
+    if lake_format(lake) != "txlog":
+        raise click.ClickException(f"{lake} is not a txlog-format lake")
+    spark = _spark("maintain")
+    out: dict = {}
+    for root, dirs, _files in os.walk(lake):
+        if "_txlog" in dirs:
+            dirs.remove("_txlog")       # never descend into the log
+            out[os.path.relpath(root, lake)] = LogTable(
+                spark, root
+            ).optimize_if_needed(max_dead_ratio=max_dead_ratio)
+    _echo(out)
 
 
 @cli.group()

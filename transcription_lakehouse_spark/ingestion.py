@@ -24,6 +24,7 @@ __all__ = [
     "read_versioned",
     "read_as_of",
     "list_versions",
+    "vacuum",
     "incremental_filter",
     "lake_format",
     "set_lake_format",
@@ -413,6 +414,59 @@ def list_versions(base_dir: str, artifact: str) -> list[dict]:
     return out
 
 
+def _utc(iso: str):
+    """Parse an ISO-8601 instant; a naive one is taken as UTC."""
+    from datetime import datetime, timezone
+
+    dt = datetime.fromisoformat(iso)
+    return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
+
+
+def vacuum(
+    base_dir: str,
+    artifact: str,
+    keep_last: int = 2,
+    older_than: str | None = None,
+    dry_run: bool = False,
+) -> list[str]:
+    """Retention for the versioned-dir convention — the VACUUM that
+    completes the write_versioned / read_as_of lifecycle
+    (Delta's VACUUM analog; the reference treats snapshots as the durable
+    copies, `src/lakehouse/snapshot/creator.py:99-130`, so superseded
+    working versions are reclaimable).
+
+    Deletes version directories that are BOTH outside the newest
+    ``keep_last`` (by creation time, the same ordering read_as_of resolves
+    against) AND — when ``older_than`` (ISO-8601) is given — created
+    before that instant. The newest version is never deleted regardless of
+    arguments. Returns the deleted (or would-delete, with dry_run) version
+    labels. Driver-side directory I/O only."""
+    import shutil
+
+    if keep_last < 1:
+        raise ValueError("vacuum: keep_last must be >= 1")
+    if lake_format(base_dir) == "txlog":
+        # txlog versions are log entries over a shared file set — deleting
+        # a "version path" would delete the whole table; route to the
+        # log-driven reclaim instead
+        raise ValueError(
+            "this lake is txlog-format: use "
+            "LogTable(spark, <lake>/<artifact>).vacuum(retain_last=...) "
+            "(CLI: `table vacuum`)"
+        )
+    versions = list_versions(base_dir, artifact)
+    candidates = versions[:-keep_last] if keep_last < len(versions) else []
+    if older_than is not None:
+        cutoff = _utc(older_than)
+        candidates = [v for v in candidates if _utc(v["created_at"]) < cutoff]
+    removed = []
+    for v in candidates:
+        if not dry_run:
+            shutil.rmtree(v["path"])
+        removed.append(v["version"])
+    return removed
+
+
 def read_as_of(
     spark: SparkSession,
     base_dir: str,
@@ -429,14 +483,9 @@ def read_as_of(
     Resolution: explicit ``version`` label wins; else ``as_of`` (ISO-8601
     UTC timestamp) picks the newest version created at or before that
     instant (raises if none existed yet); else the newest version.
-    Compose with `maintenance.version_diff` on the resolved paths to audit
-    what a rollback to the older version would change."""
-    from datetime import datetime, timezone
-
-    def _ts(s: str) -> datetime:
-        dt = datetime.fromisoformat(s)
-        return dt if dt.tzinfo else dt.replace(tzinfo=timezone.utc)
-
+    To audit what a rollback would change, use a txlog lake, where
+    `LogTable.changes` / `changes_keyed` diff any two versions (a dirs
+    version imports as one with `lakehouse table create`)."""
     if version is not None:
         return read_versioned(spark, base_dir, artifact, version, columns)
     if lake_format(base_dir) == "txlog":
@@ -448,8 +497,8 @@ def read_as_of(
     if not versions:
         raise ValueError(f"no versions of {artifact!r} under {base_dir}")
     if as_of is not None:
-        cutoff = _ts(as_of)
-        eligible = [v for v in versions if _ts(v["created_at"]) <= cutoff]
+        cutoff = _utc(as_of)
+        eligible = [v for v in versions if _utc(v["created_at"]) <= cutoff]
         if not eligible:
             raise ValueError(
                 f"no version of {artifact!r} existed at {as_of} "

@@ -1,23 +1,13 @@
-"""End-to-end lakehouse pipeline + CLI.
+"""End-to-end lakehouse pipeline stages.
 
 Spark reshape of the reference's CLI surface
 (`/root/reference/src/lakehouse/cli/`): ingest → materialize (spans, beats,
 sections, embeddings) → catalogs, with parquet tables under
 ``<lake>/<artifact>/<version>/`` as the stage boundaries (SURVEY §3.2).
-
-Usage:
-    python -m transcription_lakehouse_spark.pipeline ingest <input_glob> <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline materialize <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline catalog <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline validate <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline quality <lake_dir>
-    python -m transcription_lakehouse_spark.pipeline snapshot <lake_dir> [version]
-    python -m transcription_lakehouse_spark.pipeline verify <snapshot_dir>
+The command line over these stages is `cli.py`.
 """
 
 from __future__ import annotations
-
-import sys
 
 import pyspark.sql.functions as F
 from pyspark.sql import SparkSession
@@ -35,7 +25,6 @@ from .ingestion import artifact_exists
 from .ingestion import ingest as _ingest
 from .ingestion import read_versioned, write_versioned
 from .schemas import BEAT_SCHEMA, SECTION_SCHEMA, SPAN_SCHEMA
-from .session import get_spark
 from .sources.transcripts import read_jsonl, with_default_episode_id
 from .speaker_roles import SpeakerRoleConfig, beat_speaker_metadata, enrich_spans
 
@@ -46,16 +35,22 @@ def ingest(
 ) -> dict[str, int]:
     raw = with_default_episode_id(read_jsonl(spark, input_glob))
     stats = _ingest(spark, raw, lake_dir, fmt=fmt)
-    if keep_raw:  # S11 bronze retention (`pipeline.py:284-299`)
-        import glob as _glob
-        import os
-        import shutil
-
-        raw_dir = os.path.join(lake_dir, "raw", "v1")
-        os.makedirs(raw_dir, exist_ok=True)
-        for src in sorted(_glob.glob(input_glob)):
-            shutil.copy2(src, os.path.join(raw_dir, os.path.basename(src)))
+    if keep_raw:
+        copy_raw(input_glob, lake_dir)
     return stats
+
+
+def copy_raw(input_glob: str, lake_dir: str) -> None:
+    """S11 bronze retention (`pipeline.py:284-299`): copy the ingested
+    JSONL files unchanged under ``<lake>/raw/v1``."""
+    import glob as _glob
+    import os
+    import shutil
+
+    raw_dir = os.path.join(lake_dir, "raw", "v1")
+    os.makedirs(raw_dir, exist_ok=True)
+    for src in sorted(_glob.glob(input_glob)):
+        shutil.copy2(src, os.path.join(raw_dir, os.path.basename(src)))
 
 
 def materialize(
@@ -244,62 +239,3 @@ def snapshot(
         "verified": not problems,
         "problems": problems,
     }
-
-
-def main(argv: list[str]) -> int:
-    n_args = {
-        "ingest": 3,
-        "materialize": 2,
-        "catalog": 2,
-        "validate": 2,
-        "quality": 2,
-        "snapshot": 2,
-        "verify": 2,
-        "maintain": 2,
-    }
-    if not argv or argv[0] not in n_args or len(argv) < n_args[argv[0]]:
-        print(__doc__)
-        return 2
-    cmd = argv[0]
-    if cmd == "verify":  # pure filesystem check, no Spark needed
-        from .snapshot import verify_snapshot
-
-        problems = verify_snapshot(argv[1])
-        print({"snapshot": argv[1], "verified": not problems, "problems": problems})
-        return 0 if not problems else 1
-    spark = get_spark(app_name=f"lakehouse-{cmd}")
-    if cmd == "ingest":
-        # optional 4th arg: lake format (dirs | txlog)
-        print(ingest(spark, argv[1], argv[2],
-                     fmt=argv[3] if len(argv) > 3 else None))
-    elif cmd == "materialize":
-        print(materialize(spark, argv[1]))
-    elif cmd == "catalog":
-        print(catalog(spark, argv[1]))
-    elif cmd == "maintain":
-        # lake-wide auto-OPTIMIZE: optional 3rd arg = table-level
-        # dead-ratio trigger (default 0.2)
-        from .maintenance import optimize_lake
-
-        print(optimize_lake(
-            spark, argv[1],
-            max_dead_ratio=float(argv[2]) if len(argv) > 2 else 0.2,
-        ))
-    elif cmd == "validate":
-        out = validate(spark, argv[1])
-        print(out)
-        return 0 if out["ok"] else 1
-    elif cmd == "quality":
-        out = quality(spark, argv[1])
-        print(out)
-        # RED gates CI (reference exits non-zero on failed assessment)
-        return 1 if out["status"] == "RED" else 0
-    elif cmd == "snapshot":
-        out = snapshot(spark, argv[1], argv[2] if len(argv) > 2 else "v1.0.0")
-        print(out)
-        return 0 if out["verified"] else 1
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main(sys.argv[1:]))

@@ -645,6 +645,46 @@ def _norm_schema(schema_json: str) -> list[tuple[str, str]]:
     return [(f.name, f.dataType.simpleString()) for f in st.fields]
 
 
+def zorder_value(
+    cols: list,
+    bounds: list[tuple[float, float]],
+    bits: int = 10,
+):
+    """Interleaved-bit Z-value over ``cols`` (Morton order): each column is
+    min/max-scaled onto a 2^bits grid and the grid coordinates' bits are
+    interleaved, so rows close in EVERY dimension get close z-values. Pure
+    constant-folded integer arithmetic (bits*len(cols) shift-or terms), no
+    UDF. ``bounds`` are (min, max) per column — driver-side scalars from
+    one aggregate."""
+    if bits * len(cols) > 62:
+        raise ValueError(
+            f"zorder_value: {bits} bits x {len(cols)} columns exceeds a "
+            "63-bit long; lower bits or z-order fewer columns"
+        )
+    grid = (1 << bits) - 1
+    coords = []
+    for c, (lo, hi) in zip(cols, bounds):
+        if lo is None or hi is None:
+            raise ValueError(
+                f"zorder_value: column {c!r} has NULL min/max (all-NULL or "
+                "empty input) — cannot place NULLs on the z-grid"
+            )
+        span = (hi - lo) or 1.0
+        scaled = F.floor(
+            (F.col(c).cast("double") - F.lit(float(lo)))
+            / F.lit(float(span))
+            * grid
+        ).cast("long")
+        coords.append(F.greatest(F.lit(0), F.least(F.lit(grid), scaled)))
+    z = F.lit(0).cast("long")
+    n = len(coords)
+    for i in range(bits):
+        for j, coord in enumerate(coords):
+            bit = F.shiftright(coord, i).bitwiseAND(F.lit(1))
+            z = z + (bit * F.lit(1 << (i * n + j)))
+    return z
+
+
 class LogTable:
     """Handle on one transaction-log table rooted at ``path``.
 
@@ -1835,7 +1875,18 @@ class LogTable:
         raise last_exc
 
     def _refuse_dup_keys(self, df: DataFrame, key: str, op: str) -> None:
-        dup = df.groupBy(key).count().filter(F.col("count") > 1).head(1)
+        # NULL keys ride the same grouping pass: a NULL never matches the
+        # left-semi/anti joins in _keyed_rewrite, so a NULL-keyed row
+        # would be inserted next to the old one instead of replacing it
+        dup = df.groupBy(key).count().filter(
+            F.col(key).isNull() | (F.col("count") > 1)
+        ).head(1)
+        if dup and dup[0][key] is None:
+            raise ValueError(
+                f"{op}: source contains {dup[0]['count']} row(s) with a "
+                f"NULL {key}; NULL keys cannot match existing rows and "
+                "would duplicate instead of replace"
+            )
         if dup:
             raise ValueError(
                 f"{op}: source contains {dup[0]['count']} rows for key "
@@ -1987,8 +2038,8 @@ class LogTable:
         holding matched keys, same as a 10-key one. Duplicate keys in
         ``updates`` are REFUSED (Delta MERGE raises on multiple source
         matches; silently inserting every duplicate would leave several
-        rows per merge key). Lost commit races re-plan from the new tip,
-        like ``delete``."""
+        rows per merge key), and so are NULL keys, which can never match.
+        Lost commit races re-plan from the new tip, like ``delete``."""
         self._refuse_dup_keys(updates, key, "merge")
         return self._apply_auto_optimize(
             self._keyed_rewrite(updates.select(key), updates, key,
@@ -2080,8 +2131,6 @@ class LogTable:
                 # the read path sheds its bitmap filter
                 base = self._read_of(prefix)
                 if zorder_by:
-                    from .maintenance import zorder_value
-
                     stats_row = base.agg(*[
                         f(c).alias(f"{n}_{c}")
                         for c in zorder_by
@@ -2475,8 +2524,6 @@ class LogTable:
             else:
                 nf = max(1, len(targets))
             if zorder_by:
-                from .maintenance import zorder_value
-
                 stats_row = df.agg(*[
                     f(c).alias(f"{n}_{c}")
                     for c in zorder_by
